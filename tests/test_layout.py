@@ -9,6 +9,7 @@ from universal_pdf_extractor_spark.kernels.layout import (
     turn_view,
     turn_view_batch,
 )
+from universal_pdf_extractor_spark.kernels.segment_extract import analyse_segment
 
 SAMPLE = (
     "Barclays Bank\n"
@@ -87,6 +88,23 @@ def test_batch_fast_path_matches_ir_route():
         rebuilt = [{"field": "content", "start": a, "end": b}
                    for a, b in zip(batch.loc[i, "span_starts"], batch.loc[i, "span_ends"])]
         assert rebuilt == view["spans"], i
+
+
+def test_extraction_leaves_the_line_dicts_unwritten():
+    # a column-path statement: the row merge runs its preliminary and
+    # final passes over these same line dicts
+    page = "\n".join(
+        ["Date          Description                 Amount        Balance",
+         "01/01/2024    OPENING BALANCE B/F                       1000.00"]
+        + [f"{d:02d}/01/2024    {'SHOP PAYMENT ' + str(d):<24}{'10.00':>10}"
+           f"{1000 - 10 * (d - 1):>15.2f}" for d in range(2, 14)])
+    _, lines = tokenize_turn(page)
+    keys = [set(ln) for ln in lines]
+    result = analyse_segment(lines)
+    assert len(result["records"]) == 12
+    assert not result["fallback_used"]
+    assert [set(ln) for ln in lines] == keys
+    assert not any("_is_bal" in ln for ln in lines)
 
 
 def test_tokens_table_contract(spark):

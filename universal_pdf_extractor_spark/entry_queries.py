@@ -49,6 +49,7 @@ from pyspark.sql import functions as F  # noqa: N812
 
 from .datapipe import dedup, similarity, textstats
 from .io.fixtures import n_convs_for_sf, transcripts_sdf
+from .schemas import FALLBACK_TIERS
 from .stages.pipeline import run_pipeline
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -2356,11 +2357,9 @@ def _records_descriptions_sql() -> str:
 
 
 # every non-main-path direction_source the tiers can emit; the
-# "_rescue" variants mark cascade rescues on segments where neither
-# majority routing rule fired (segment_extract._fallback), which the
-# structured-tier oracles must never alias into their slices
-_FALLBACK_SOURCES = ["text_grid_table", "delim_table", "row_pattern",
-                     "delim_table_rescue", "row_pattern_rescue"]
+# structured-tier oracles must never alias the "_rescue" variants into
+# their slices
+_FALLBACK_SOURCES = list(FALLBACK_TIERS)
 
 
 def _records_headerless_sql() -> str:

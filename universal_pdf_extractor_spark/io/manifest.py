@@ -10,6 +10,16 @@ committed — exact resume, mirroring the reference's
 delete-before-rewrite idempotency + per-document status machine
 (orchestrator.py:184-205, models/enums.py:15-25) at dataset scale.
 
+Every manifest metric is computed by the writes themselves: each
+output table is written through ``DataFrame.observe``, whose
+aggregates (row count, checksum, extraction-path and parser counts)
+ride along in the write's own jobs, and the group's input rows are
+observed on the input frame, which the first write scans.  A group
+therefore costs only its five writes' jobs, each described as
+``write <table> group=<g>``.  ``count_and_checksum`` computes the same
+(count, checksum) pair over any frame, e.g. the parquet read back, to
+verify a manifest.
+
 The manifest is committed AFTER the data writes succeed (write to a
 temp name, atomic rename), so a crash mid-group leaves no manifest
 and the group is redone idempotently (mode=overwrite per group dir).
@@ -23,14 +33,17 @@ run_id column, and ``runs.jsonl`` is the append-only run registry —
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import time
 import uuid
 from typing import Optional
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F  # noqa: N812
+
+from ..schemas import COLUMN_PATH, EXTRACTION_PATHS, FALLBACK_TIERS
 
 MANIFEST_DIR = "_manifests"
 RUNS_LOG = "runs.jsonl"
@@ -46,25 +59,57 @@ def bucket_of(conv_id_col, n_groups: int):
     return F.pmod(F.xxhash64(conv_id_col), F.lit(n_groups))
 
 
+def _count_and_checksum_aggs(columns: list[str]) -> list:
+    """(rows, xor64) aggregates: row count and an order-insensitive
+    64-bit checksum over every column, shared by the observed writes
+    and ``count_and_checksum`` so the two cannot drift apart."""
+    h = F.xxhash64(*[F.col(c).cast("string") for c in columns])
+    return [F.count(F.lit(1)).alias("rows"),
+            F.coalesce(F.bit_xor(h), F.lit(0)).alias("xor64")]
+
+
 def count_and_checksum(df: DataFrame) -> tuple[int, int]:
     """(row count, order-insensitive 64-bit checksum) in ONE job.
 
-    Computed from the (cached-lineage) frame rather than by re-reading
-    the freshly written parquet: the write either committed or raised,
-    so a read-back would verify the filesystem, not the data, and it
-    would cost two extra full scans per table per group (one for the
-    count, one for the checksum) — those are the scans this saves.
-    """
-    h = F.xxhash64(*[F.col(c).cast("string") for c in df.columns])
-    row = df.select(h.alias("h")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.expr("bit_xor(h)"), F.lit(0)).alias("x")).first()
-    return int(row["n"]), int(row["x"])
+    The manifest's writes observe the same pair while they write; this
+    is the verifier that recomputes it over any frame, e.g. a table's
+    parquet read back."""
+    row = df.agg(*_count_and_checksum_aggs(df.columns)).first()
+    return int(row["rows"]), int(row["xor64"])
 
 
-def checksum(df: DataFrame) -> int:
-    """Order-insensitive 64-bit checksum over all columns."""
-    return count_and_checksum(df)[1]
+# cost/usage events analogue (cost_tracker.py, cost_events DDL
+# tables.py:576-603): per-"engine" row counts, observed on the write of
+# the table they describe; duration_sec is the latency dimension
+_ENGINE_EVENTS = {"turns": "turns_by_path", "records": "records_by_parser"}
+
+
+def _write_aggs(table: str, columns: list[str]) -> list:
+    """Aggregates observed on ``table``'s write: (rows, xor64), plus
+    the TEXT/TOOL/EMPTY extraction paths on turns and the record
+    parsers on records (fallback rows count under their tier's
+    direction_source, main-path rows roll up as column_path)."""
+    aggs = _count_and_checksum_aggs(columns)
+    if table == "turns":
+        aggs += [F.count_if(F.col("extraction_path") == p).alias(p)
+                 for p in EXTRACTION_PATHS]
+    elif table == "records":
+        aggs.append(F.count_if(~F.col("fallback_used")).alias(COLUMN_PATH))
+        aggs += [F.count_if(F.col("fallback_used") & (F.col("direction_source") == t))
+                 .alias(t) for t in FALLBACK_TIERS]
+    return aggs
+
+
+@contextlib.contextmanager
+def _job_description(sc, description: str):
+    """Describe every Spark job started in the block; the caller's
+    description (e.g. its job group's) is restored afterwards."""
+    previous = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(description)
+    try:
+        yield
+    finally:
+        sc.setJobDescription(previous)
 
 
 def manifest_path(out_dir: str, group: int) -> str:
@@ -125,12 +170,26 @@ def latest_run(out_dir: str) -> Optional[dict]:
     return None
 
 
+def _input_rows(seen: Observation, outputs: dict, group: int) -> int:
+    """The group's input rows, observed on its input frame.
+
+    When a group is empty, adaptive execution replaces the plan above
+    its first (empty) exchange with an empty relation, the input's
+    observer included, and the observation completes with an empty
+    row that ``Observation.get`` cannot convert: that is zero rows.
+    """
+    if seen._jo.getRow().length():
+        return seen.get["rows"]
+    if any(o["rows"] for o in outputs.values()):
+        raise RuntimeError(f"group {group}: the input rows were not observed")
+    return 0
+
+
 def run_with_resume(transcripts: DataFrame,
                     out_dir: str,
                     n_groups: int = 8,
                     run_pipeline_fn=None,
                     tables: Optional[list[str]] = None,
-                    with_checksums: bool = True,
                     run_id: Optional[str] = None) -> dict:
     """Process bucket groups not yet committed; return a run summary.
 
@@ -152,6 +211,7 @@ def run_with_resume(transcripts: DataFrame,
     tables = tables or ["turns", "records", "segments", "conversations",
                         "detected_tables"]
     run_id = run_id or f"run-{uuid.uuid4().hex[:12]}"
+    sc = transcripts.sparkSession.sparkContext
 
     done = committed_groups(out_dir)
     summary = {"n_groups": n_groups, "skipped": sorted(done),
@@ -163,44 +223,31 @@ def run_with_resume(transcripts: DataFrame,
         if g in done:
             continue
         t0 = time.perf_counter()
-        part = bucketed.where(F.col("_grp") == g).drop("_grp")
+        seen = Observation()
+        part = bucketed.where(F.col("_grp") == g).drop("_grp") \
+                       .observe(seen, F.count(F.lit(1)).alias("rows"))
         outputs = run_pipeline_fn(part, persist=True)
         cached = [outputs.pop(k) for k in list(outputs) if k.startswith("_")]
-        input_rows = part.count()
-        meta: dict = {"group": g, "input_rows": input_rows, "outputs": {},
-                      "run_id": run_id, "pipeline_version": PIPELINE_VERSION}
-        # cost/usage events analogue (cost_tracker.py, cost_events DDL
-        # tables.py:576-603): per-"engine" row counts measured from the
-        # cached lineage — TEXT/TOOL/EMPTY extraction paths and
-        # main-vs-fallback record parsers; duration_sec below is the
-        # latency dimension
-        if "turns" in outputs:
-            meta["engine_events"] = {"turns_by_path": {
-                r["extraction_path"]: r["n"]
-                for r in outputs["turns"].groupBy("extraction_path")
-                .agg(F.count(F.lit(1)).alias("n")).collect()}}
-        if "records" in outputs:
-            # per-tier rescue accounting: fallback rows keep their
-            # tier's direction_source (text_grid_table / delim_table /
-            # row_pattern), main-path rows roll up as column_path
-            by_parser: dict = {}
-            for r in (outputs["records"]
-                      .groupBy("fallback_used", "direction_source")
-                      .agg(F.count(F.lit(1)).alias("n")).collect()):
-                key = r["direction_source"] if r["fallback_used"] else "column_path"
-                by_parser[key] = by_parser.get(key, 0) + r["n"]
-            meta.setdefault("engine_events", {})["records_by_parser"] = by_parser
+        observed = {}
         for name in tables:
             df = outputs[name].withColumn("run_id", F.lit(run_id))
+            observed[name] = Observation()
             path = os.path.join(out_dir, name, f"bucket_group={g}")
-            df.write.mode("overwrite").parquet(path)
-            # metrics from the cached lineage in ONE job — no parquet
-            # read-back (see count_and_checksum)
-            if with_checksums:
-                rows, xor64 = count_and_checksum(df)
-                meta["outputs"][name] = {"rows": rows, "xor64": xor64}
-            else:
-                meta["outputs"][name] = {"rows": df.count()}
+            with _job_description(sc, f"write {name} group={g}"):
+                df.observe(observed[name], *_write_aggs(name, df.columns)) \
+                  .write.mode("overwrite").parquet(path)
+        # every observation is complete once the writes have returned
+        meta: dict = {"group": g, "outputs": {}, "run_id": run_id,
+                      "pipeline_version": PIPELINE_VERSION}
+        for name, obs in observed.items():
+            counts = obs.get
+            meta["outputs"][name] = {"rows": counts.pop("rows"),
+                                     "xor64": counts.pop("xor64")}
+            if name in _ENGINE_EVENTS:
+                # list only the engines that produced rows
+                meta.setdefault("engine_events", {})[_ENGINE_EVENTS[name]] = {
+                    k: n for k, n in counts.items() if n}
+        meta["input_rows"] = _input_rows(seen, meta["outputs"], g)
         for c in cached:
             c.unpersist()
         meta["duration_sec"] = round(time.perf_counter() - t0, 3)

@@ -48,10 +48,17 @@ def reconstruct_rows(lines: list[dict],
                      columns: list[dict],
                      date_column_index: int = 0,
                      amount_column_indices: Optional[list[int]] = None,
-                     cells_per_line: Optional[list[list[dict]]] = None) -> list[dict]:
+                     cells_per_line: Optional[list[list[dict]]] = None,
+                     markers_per_line: Optional[list[Optional[bool]]] = None,
+                     ) -> list[dict]:
     """Merge lines into transaction rows (sequential per segment).
 
     Row: {line_indices, cells, is_balance_marker, raw_text}.
+
+    ``markers_per_line`` memoizes each line's balance-marker test by
+    line position (None = not tested yet) and is filled in place: the
+    preliminary and final passes share one list, so the marker regex
+    runs once per line.  The line dicts themselves are never written.
     """
     if not lines or not columns:
         return []
@@ -62,6 +69,8 @@ def reconstruct_rows(lines: list[dict],
 
     if cells_per_line is None:
         cells_per_line = precompute_cells(lines, columns)
+    if markers_per_line is None:
+        markers_per_line = [None] * len(lines)
 
     rows: list[dict] = []
     current: Optional[dict] = None
@@ -69,11 +78,9 @@ def reconstruct_rows(lines: list[dict],
     for i, line in enumerate(lines):
         cells = cells_per_line[i]
 
-        # memoized on the shared line dict: the preliminary and final
-        # passes would otherwise run the marker regex twice per line
-        is_marker = line.get("_is_bal")
+        is_marker = markers_per_line[i]
         if is_marker is None:
-            is_marker = line["_is_bal"] = is_balance_marker(line["text"])
+            is_marker = markers_per_line[i] = is_balance_marker(line["text"])
         if is_marker:
             if current:
                 rows.append(current)

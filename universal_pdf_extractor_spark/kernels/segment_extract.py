@@ -742,6 +742,7 @@ def analyse_segment(lines: list[dict], today: date = DEFAULT_TODAY) -> dict:
         lines = lines[header_idx + 1:]
 
     cells_per_line = precompute_cells(lines, columns)
+    markers_per_line = [None] * len(lines)
     # lazy: only evaluated when headers leave columns unassigned or the
     # balance-promotion gate needs row evidence (assign_column_roles);
     # fully-headered segments skip this whole preliminary pass
@@ -750,6 +751,7 @@ def analyse_segment(lines: list[dict], today: date = DEFAULT_TODAY) -> dict:
         date_column_index=0,
         amount_column_indices=[c["column_index"] for c in columns if c["column_index"] > 0],
         cells_per_line=cells_per_line,
+        markers_per_line=markers_per_line,
     )
     roles = assign_column_roles(columns, header_texts, preliminary_rows)
 
@@ -763,7 +765,8 @@ def analyse_segment(lines: list[dict], today: date = DEFAULT_TODAY) -> dict:
         return _fallback()
 
     rows = reconstruct_rows(lines, columns, date_col, amount_cols,
-                            cells_per_line=cells_per_line)
+                            cells_per_line=cells_per_line,
+                            markers_per_line=markers_per_line)
     transaction_rows = [r for r in rows if not r["is_balance_marker"]]
     if not transaction_rows:
         return _fallback()

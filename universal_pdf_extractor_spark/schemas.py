@@ -57,6 +57,18 @@ TURNS_SCHEMA = StructType([
     StructField("n_tokens", IntegerType(), False),
 ])
 
+# every value of turns.extraction_path (stages/tokenize.py)
+EXTRACTION_PATHS = ("TEXT", "TOOL", "EMPTY")
+
+# records.direction_source of every fallback tier
+# (kernels/segment_extract.py); the "_rescue" variants mark cascade
+# rescues on segments where neither majority routing rule fired
+FALLBACK_TIERS = ("text_grid_table", "delim_table", "row_pattern",
+                  "delim_table_rescue", "row_pattern_rescue")
+
+# the manifest's parser key for main-path (non-fallback) records
+COLUMN_PATH = "column_path"
+
 # token IR (contracts.py:20-34), exposed for diagnostics / reuse
 TOKEN_TYPE = StructType([
     StructField("text", StringType(), False),

@@ -1,20 +1,23 @@
-"""Stage 4 — per-segment record extraction (grouped pandas UDF).
+"""Stage 4 — per-segment record extraction (pandas UDF per conversation).
 
 The sequential parts of the reference pipeline — row reconstruction
 (table_extractor.py:243-321), role assignment ordering
 (semantic_mapper.py:167-281) and the balance-chain walks
 (balance_solver.py:172-245,390-430) — carry genuine running state, so
-they execute inside ONE ``applyInPandas`` grouped by conv_id,
-iterating that conversation's segments in order.  Everything upstream
-(tokenize, boundary scoring, segment ids) and downstream (scoring,
-joins, ordering) is native.
+they execute inside ONE ``mapInPandas`` pass that walks each
+conversation's segments in order.  Everything upstream (tokenize,
+boundary scoring, segment ids) and downstream (scoring, joins,
+ordering) is native.
 
-Grouping by conv_id (not (conv_id, segment_index)) deliberately
-reuses the hash exchange introduced by the segment stage's window —
-the plan shows a single Exchange feeding both.  Conversations are
-bounded by MAX_TURNS in this corpus; for corpora with pathological
-conversation lengths, regroup by (conv_id, segment_index) instead
-(one extra shuffle, finer skew splitting) — see stages/pipeline.py.
+The default path runs ``mapInPandas`` straight over the segment
+stage's output, which the window has already hash-partitioned by
+conv_id and sorted by (conv_id, turn_idx): it reuses that exchange —
+the plan shows a single Exchange feeding both — and one Arrow batch
+carries many whole conversations.  Conversations are bounded by
+MAX_TURNS in this corpus; for corpora with pathological conversation
+lengths, ``split_segments=True`` regroups by (conv_id, segment_index)
+with ``groupBy().applyInPandas`` instead (one extra shuffle, finer
+skew splitting) — see stages/pipeline.py.
 
 Output carries the reference `transactions` row shape
 (tables.py:298-382) plus per-segment opening/closing balances used to

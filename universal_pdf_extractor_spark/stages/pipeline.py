@@ -3,21 +3,25 @@
     transcripts
       -> tokenize_stage      (no shuffle; Arrow-batched layout kernel)
       -> segment_stage       (native rlike + window; shuffle #1 on conv_id)
-      -> extract_stage       (applyInPandas per conversation; REUSES
-                              the conv_id exchange - no new shuffle)
+      -> extract_combined_stage
+                             (mapInPandas over whole conversations:
+                              records and detected_tables diagnostics
+                              from one pass; REUSES the conv_id
+                              exchange - no new shuffle)
       -> classify_stage      (groupBy conv_id; reuses the exchange)
       -> conversations_table (agg over the small records frame)
 
 Outputs: turns (north-rule per-turn main content), records
-(transactions analogue), segments, conversations.
+(transactions analogue), segments, conversations, detected_tables.
 
 Scale notes (10^12 turns):
 - the fat `text` column is shuffled exactly once (the conv_id
   exchange); all conversation-level stages hang off that one exchange;
 - AQE handles skewed conversations at the exchange; for corpora with
   unbounded conversation lengths switch EXTRACT grouping to
-  (conv_id, segment_index) — boundaries split giant documents the
-  same way the reference segments multi-statement PDFs;
+  (conv_id, segment_index) with split_segments=True — boundaries
+  split giant documents the same way the reference segments
+  multi-statement PDFs;
 - outputs are written partitioned by bucket(conv_id) with
   (conv_id, turn_idx) sort order; see io/manifest.py for resumable
   per-bucket writes.
