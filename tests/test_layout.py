@@ -9,6 +9,7 @@ from universal_pdf_extractor_spark.kernels.layout import (
     turn_view,
     turn_view_batch,
 )
+from universal_pdf_extractor_spark.kernels.patterns import is_summary_row, is_summary_row_batch
 from universal_pdf_extractor_spark.kernels.segment_extract import analyse_segment
 
 SAMPLE = (
@@ -88,6 +89,15 @@ def test_batch_fast_path_matches_ir_route():
         rebuilt = [{"field": "content", "start": a, "end": b}
                    for a, b in zip(batch.loc[i, "span_starts"], batch.loc[i, "span_ends"])]
         assert rebuilt == view["spans"], i
+
+
+def test_batch_boilerplate_matches_scalar_on_control_whitespace():
+    # ASCII characters that Python re's \s matches and RE2's does not:
+    # such rows must not take the RE2 fast path
+    values = pd.Series(["opening\x0bbalance", "sort\x1ccode", "account\x1dnumber",
+                        "statement\x1eperiod", "page 1\x1fof 2", "opening balance",
+                        "tesco stores"])
+    assert is_summary_row_batch(values).tolist() == [is_summary_row(v) for v in values]
 
 
 def test_extraction_leaves_the_line_dicts_unwritten():

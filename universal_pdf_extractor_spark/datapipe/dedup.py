@@ -286,7 +286,11 @@ def minhash_signatures(documents: DataFrame,
     projections collapsed under CollapseProject into k copies of the
     md5 pipeline — a ~k x constant-factor regression on the signature
     stage.)  Values are unchanged: min over pmod(h*a_i + b_i, p) with
-    a_i = 2i+1, b_i = (i*0x9E3779B9 + 0x85EBCA6B) mod p."""
+    a_i = 2i+1, b_i = (i*0x9E3779B9 + 0x85EBCA6B) mod p.
+
+    ``id_col`` must be unique: the fold groups by it, so documents that
+    share an id merge into ONE signature over their pooled shingles,
+    with no error.  Uniqueness is not checked here."""
     p = MERSENNE_PRIME
     # spread before the fold: the md5-per-shingle + 64-permutation
     # reduction is the dominant narrow compute and must sit above an
@@ -400,6 +404,10 @@ def simhash_fingerprints(documents: DataFrame,
     Computed columnarly: per bit, count tokens with the bit set vs
     total, no UDF.  60 bits (not 64) because the cross-engine hash60
     provides 60 uniform bits — hamming semantics are unchanged.
+
+    ``id_col`` must be unique: the bit counts group by it, so documents
+    that share an id merge into ONE fingerprint over their pooled
+    tokens, with no error.  Uniqueness is not checked here.
     """
     words = F.split(normalize_text(F.col(text_col)), " ")
     # explode + 60 conditional SUM aggregates instead of 60 per-doc
@@ -408,7 +416,7 @@ def simhash_fingerprints(documents: DataFrame,
     # (h >> j) & 1 per exploded token with map-side partial aggregation
     # counts exactly the same bits.  ``spread`` first: the per-token
     # md5 hashing is the expensive narrow stage (see
-    # ngram_jaccard_pairs).  doc_id is assumed unique (table key).
+    # ngram_jaccard_pairs).
     hashed = spread(
         documents.select(F.col(id_col).alias("doc_id"),
                          F.col(text_col).alias("text")), "doc_id",

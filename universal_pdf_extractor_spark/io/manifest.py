@@ -43,6 +43,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F  # noqa: N812
 
+from ..kernels.patterns import sql_string
 from ..schemas import COLUMN_PATH, EXTRACTION_PATHS, FALLBACK_TIERS
 
 MANIFEST_DIR = "_manifests"
@@ -59,13 +60,20 @@ def bucket_of(conv_id_col, n_groups: int):
     return F.pmod(F.xxhash64(conv_id_col), F.lit(n_groups))
 
 
+def _ident(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
 def _count_and_checksum_aggs(columns: list[str]) -> list:
     """(rows, xor64) aggregates: row count and an order-insensitive
     64-bit checksum over every column, shared by the observed writes
-    and ``count_and_checksum`` so the two cannot drift apart."""
-    h = F.xxhash64(*[F.col(c).cast("string") for c in columns])
-    return [F.count(F.lit(1)).alias("rows"),
-            F.coalesce(F.bit_xor(h), F.lit(0)).alias("xor64")]
+    and ``count_and_checksum`` so the two cannot drift apart.
+
+    Built as SQL text: one expression string costs a few py4j round
+    trips, where a Column cast per output column costs ~20 each."""
+    h = ", ".join(f"CAST({_ident(c)} AS STRING)" for c in columns)
+    return [F.expr("count(1) AS `rows`"),
+            F.expr(f"coalesce(bit_xor(xxhash64({h})), 0) AS xor64")]
 
 
 def count_and_checksum(df: DataFrame) -> tuple[int, int]:
@@ -91,12 +99,12 @@ def _write_aggs(table: str, columns: list[str]) -> list:
     direction_source, main-path rows roll up as column_path)."""
     aggs = _count_and_checksum_aggs(columns)
     if table == "turns":
-        aggs += [F.count_if(F.col("extraction_path") == p).alias(p)
+        aggs += [F.expr(f"count_if(extraction_path = {sql_string(p)}) AS {_ident(p)}")
                  for p in EXTRACTION_PATHS]
     elif table == "records":
-        aggs.append(F.count_if(~F.col("fallback_used")).alias(COLUMN_PATH))
-        aggs += [F.count_if(F.col("fallback_used") & (F.col("direction_source") == t))
-                 .alias(t) for t in FALLBACK_TIERS]
+        aggs.append(F.expr(f"count_if(NOT fallback_used) AS {_ident(COLUMN_PATH)}"))
+        aggs += [F.expr(f"count_if(fallback_used AND direction_source = {sql_string(t)})"
+                        f" AS {_ident(t)}") for t in FALLBACK_TIERS]
     return aggs
 
 

@@ -235,6 +235,24 @@ def pattern_literal(pattern: str) -> str | None:
     return None
 
 
+def sql_string(s: str) -> str:
+    """``s`` as a Spark SQL string literal, for expressions built as text.
+
+    Assumes the default ``spark.sql.parser.escapedStringLiterals=false``,
+    under which the parser unescapes backslash sequences: every
+    backslash is doubled and every quote backslash-escaped, so the
+    literal parses back to exactly ``s`` (regex escapes such as ``\\s``
+    reach the regex engine unchanged).  DuckDB's literals follow other
+    rules (``entry_queries._sql_regex``)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def sql_double(x: float) -> str:
+    """``x`` as a Spark SQL DOUBLE literal (an unsuffixed ``0.15`` is
+    DECIMAL, which would change the arithmetic it takes part in)."""
+    return f"{float(x)!r}D"
+
+
 def _noncapturing(pattern: str) -> str:
     """Rewrite capturing groups to non-capturing (boolean use only).
 
@@ -282,17 +300,23 @@ def is_summary_row(text: str) -> bool:
     return _SUMMARY_ROW_RE.search(t) is not None
 
 
+# ASCII characters in Python re's \s but not in RE2's ([\t\n\f\r ]):
+# vertical tab and the file/group/record/unit separators
+_RE2_DIVERGENT = r"[\x0b\x1c-\x1f]"
+
+
 def _search_batch(lowered: pd.Series, pattern: str, py_re: "re.Pattern") -> pd.Series:
     """Vectorized boolean `search` over a lowered string Series.
 
     Fast path: pyarrow's RE2 engine (linear-time DFA — ~20x faster than
     Python re's backtracking scan over these wide alternations), used
-    ONLY for pure-ASCII rows.  On ASCII input the patterns' character
-    classes (\\s, \\d, \\w, \\b) mean the same thing under RE2 (ASCII
-    classes) and Python re (Unicode classes restricted to ASCII), so
-    the results are provably identical; rows containing any non-ASCII
-    byte take the Python re path, keeping batch/scalar parity exact for
-    every input (pinned by tests/test_textops.py / test_layout.py).
+    ONLY for ASCII rows free of ``_RE2_DIVERGENT`` characters.  On those
+    rows the patterns' character classes (\\s, \\d, \\w, \\b) mean the
+    same thing under RE2 and Python re, so the results are identical;
+    every other row (any non-ASCII byte, or an ASCII control character
+    that Python's \\s matches and RE2's does not) takes the Python re
+    path, keeping batch/scalar parity exact for every input (pinned by
+    tests/test_layout.py).
     """
     import numpy as np
 
@@ -303,11 +327,12 @@ def _search_batch(lowered: pd.Series, pattern: str, py_re: "re.Pattern") -> pd.S
         arr = pa.array(lowered, type=pa.string())
         res = pc.match_substring_regex(arr, pattern) \
             .to_numpy(zero_copy_only=False).astype(bool)
-        ascii_np = pc.string_is_ascii(arr).to_numpy(zero_copy_only=False)
-        nonascii = np.flatnonzero(~ascii_np)
-        if len(nonascii):
+        fast = pc.and_(pc.string_is_ascii(arr),
+                       pc.invert(pc.match_substring_regex(arr, _RE2_DIVERGENT)))
+        slow = np.flatnonzero(~fast.to_numpy(zero_copy_only=False))
+        if len(slow):
             vals = lowered.to_numpy(dtype=object)
-            for i in nonascii:
+            for i in slow:
                 res[i] = py_re.search(vals[i]) is not None
         return pd.Series(res, index=lowered.index)
     except ImportError:  # pragma: no cover - pyarrow ships with pyspark

@@ -17,12 +17,20 @@ raw_texts in turn order.
 
 The groupBy(conv_id) reuses the segment stage's hash exchange when
 chained after it; classification itself adds no UDF over turn rows.
+
+The scores, argmaxes and labels are SQL text built from the pattern
+tables at import time, not composed Column by Column: in PySpark 4.1
+every Column method call makes ~20 py4j round trips (origin tracking),
+so the ~130-term expression tree cost ~0.5 s of driver time per build.
+As text it is one ``F.expr`` per output column, which the JVM parses
+into the same tree (same guards, same left-to-right additions, DOUBLE
+literals).
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: N812
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType, StructField, StructType
@@ -41,6 +49,8 @@ from ..kernels.patterns import (
     PROVIDER_PATTERNS,
     _noncapturing,
     pattern_literal,
+    sql_double,
+    sql_string,
 )
 
 _CUSTOMER_TYPE = StructType([
@@ -56,7 +66,7 @@ def _customer_udf(conv_text: pd.Series) -> pd.DataFrame:
     return pd.DataFrame(rows, index=conv_text.index)
 
 
-def _guarded_match(text_col: Column, pattern: str) -> Column:
+def _guarded_match(pattern: str) -> str:
     """rlike guarded by a cheap mandatory-literal contains() prefilter.
 
     Semantically identical to a bare rlike: the literal is required by
@@ -64,34 +74,58 @@ def _guarded_match(text_col: Column, pattern: str) -> Column:
     regex cannot match; contains() is a fast JVM indexOf over text the
     regex engine would otherwise scan position-by-position."""
     lit = pattern_literal(pattern)
-    probe = text_col.rlike(_noncapturing(pattern))
+    probe = f"(_lowered RLIKE {sql_string(_noncapturing(pattern))})"
     if lit is None:
         return probe
-    return text_col.contains(lit) & probe
+    return f"(contains(_lowered, {sql_string(lit)}) AND {probe})"
 
 
-def _keyword_score(text_col: Column, patterns: list[str], weight: float) -> Column:
+def _keyword_score(patterns: list[str], weight: float) -> str:
     """Chained weighted additions in pattern order, capped at 1.0."""
-    score = F.lit(0.0)
-    for p in patterns:
-        score = score + F.when(_guarded_match(text_col, p), F.lit(weight)).otherwise(F.lit(0.0))
-    return F.least(score, F.lit(1.0))
+    terms = "".join(f" + CASE WHEN {_guarded_match(p)} THEN {sql_double(weight)} ELSE 0.0D END"
+                    for p in patterns)
+    return f"least(0.0D{terms}, 1.0D)"
 
 
-def _provider_best(text_col: Column) -> Column:
+def _provider_best() -> str:
     """greatest((score, -order, name)) -> first-seen wins ties."""
     candidates = []
     for order, (provider, patterns) in enumerate(PROVIDER_PATTERNS.items()):
-        matches = sum(
-            (F.when(_guarded_match(text_col, p), F.lit(1)).otherwise(F.lit(0))
-             for p in patterns),
-            start=F.lit(0),
-        )
-        score = F.least(matches.cast("double") * F.lit(PROVIDER_MATCH_WEIGHT), F.lit(1.0))
-        candidates.append(F.struct(score.alias("score"),
-                                   F.lit(-order).alias("neg_order"),
-                                   F.lit(provider).alias("name")))
-    return F.greatest(*candidates)
+        matches = "".join(f" + CASE WHEN {_guarded_match(p)} THEN 1 ELSE 0 END"
+                          for p in patterns)
+        score = f"least(CAST(0{matches} AS DOUBLE) * {sql_double(PROVIDER_MATCH_WEIGHT)}, 1.0D)"
+        candidates.append(f"named_struct('score', {score}, 'neg_order', {-order}, "
+                          f"'name', {sql_string(provider)})")
+    return f"greatest({', '.join(candidates)})"
+
+
+def _currency_best() -> str:
+    """greatest((count, -order, name)): the kernel's first-max rule."""
+    candidates = [f"named_struct('n', regexp_count(_lowered, {sql_string(pat)}), "
+                  f"'neg_order', {-order}, 'name', {sql_string(ccy)})"
+                  for order, (ccy, pat) in enumerate(CURRENCY_PATTERN_STRINGS)]
+    return f"greatest({', '.join(candidates)})"
+
+
+_FLOOR = sql_double(CLASSIFY_FLOOR)
+_BS_WINS = f"_bs > _mf AND _bs >= {_FLOOR}"
+_MF_WINS = f"_mf > _bs AND _mf >= {_FLOOR}"
+_SCORES = (
+    f"{_keyword_score(MOTOR_FINANCE_KEYWORDS, MOTOR_FINANCE_WEIGHT)} AS _mf",
+    f"{_keyword_score(BANK_STATEMENT_KEYWORDS, BANK_STATEMENT_WEIGHT)} AS _bs",
+    f"{_provider_best()} AS _best",
+    f"{_currency_best()} AS _ccy",
+)
+_LABELS = (
+    f"CASE WHEN {_BS_WINS} THEN 'BANK_STATEMENT' WHEN {_MF_WINS} THEN 'MOTOR_FINANCE' "
+    "ELSE 'UNKNOWN' END AS doc_family",
+    f"CASE WHEN {_BS_WINS} THEN _bs WHEN {_MF_WINS} THEN _mf "
+    "ELSE greatest(_bs, _mf) END AS doc_family_confidence",
+    "CASE WHEN _best.score > 0 THEN _best.name END AS provider",
+    "CASE WHEN _best.score > 0 THEN _best.score END AS provider_confidence",
+    # currency = most frequent marker, GBP default (detect_currency)
+    "CASE WHEN _ccy.n > 0 THEN _ccy.name ELSE 'GBP' END AS currency",
+)
 
 
 # Bounded classification scan: the reference classifies over a whole
@@ -143,62 +177,21 @@ def classify_stage(turns: DataFrame, extra_aggs: tuple = (),
                    extra_cols: tuple = ()) -> DataFrame:
     """turns -> one row per conversation with family/provider/customer
     (+ any ``extra_aggs`` passed through as ``extra_cols``)."""
-    # materialize the lowered text once: ~70 rlike probes reference it,
-    # and Catalyst does not CSE lower() across all of them
+    # materialize the lowered text in its own projection: every probe
+    # below reads it
     conv = conversation_text(turns, extra_aggs=extra_aggs) \
-        .withColumn("_lowered", F.lower(F.col("conv_text")))
-    lowered = F.col("_lowered")
-
-    mf = _keyword_score(lowered, MOTOR_FINANCE_KEYWORDS, MOTOR_FINANCE_WEIGHT)
-    bs = _keyword_score(lowered, BANK_STATEMENT_KEYWORDS, BANK_STATEMENT_WEIGHT)
-
-    conv = conv.withColumn("_mf", mf).withColumn("_bs", bs)
-    conv = conv.withColumn(
-        "doc_family",
-        F.when((F.col("_bs") > F.col("_mf")) & (F.col("_bs") >= CLASSIFY_FLOOR),
-               F.lit("BANK_STATEMENT"))
-         .when((F.col("_mf") > F.col("_bs")) & (F.col("_mf") >= CLASSIFY_FLOOR),
-               F.lit("MOTOR_FINANCE"))
-         .otherwise(F.lit("UNKNOWN")),
-    ).withColumn(
-        "doc_family_confidence",
-        F.when(F.col("doc_family") == "BANK_STATEMENT", F.col("_bs"))
-         .when(F.col("doc_family") == "MOTOR_FINANCE", F.col("_mf"))
-         .otherwise(F.greatest(F.col("_bs"), F.col("_mf"))),
-    )
-
-    best = _provider_best(lowered)
-    conv = conv.withColumn("_best", best).withColumn(
-        "provider",
-        F.when(F.col("_best.score") > 0, F.col("_best.name")),
-    ).withColumn(
-        "provider_confidence",
-        F.when(F.col("_best.score") > 0, F.col("_best.score")),
-    )
-
-    # currency = most frequent marker, GBP default (detect_currency);
-    # greatest((count, -order, name)) gives the kernel's first-max rule
-    ccy_candidates = [
-        F.struct(F.regexp_count(lowered, F.lit(pat)).alias("n"),
-                 F.lit(-order).alias("neg_order"),
-                 F.lit(ccy).alias("name"))
-        for order, (ccy, pat) in enumerate(CURRENCY_PATTERN_STRINGS)
-    ]
-    best_ccy = F.greatest(*ccy_candidates)
-    conv = conv.withColumn(
-        "currency",
-        F.when(best_ccy["n"] > 0, best_ccy["name"]).otherwise(F.lit("GBP")))
-
+        .selectExpr("*", "lower(conv_text) AS _lowered")
     # customer info only reads the first 50 lines (orchestrator.py:94-99);
     # slice JVM-side so the UDF ships ~2KB per conversation, not the
     # whole text — the kernel re-slices identically, so parity holds
-    head_text = F.array_join(F.slice(F.split(F.col("conv_text"), "\n"), 1, 50), "\n")
-    conv = conv.withColumn("_cust", _customer_udf(head_text))
-    return conv.select(
-        "conv_id", "n_turns", "doc_family", "doc_family_confidence",
-        "provider", "provider_confidence", "currency",
-        F.col("_cust.account_holder_name").alias("account_holder_name"),
-        F.col("_cust.account_holder_address").alias("account_holder_address"),
-        F.col("_cust.account_holder_postcode").alias("account_holder_postcode"),
+    head_text = F.expr("array_join(slice(split(conv_text, '\\n'), 1, 50), '\\n')")
+    conv = conv.select("conv_id", "n_turns", *extra_cols,
+                       *(F.expr(e) for e in _SCORES),
+                       _customer_udf(head_text).alias("_cust"))
+    return conv.selectExpr(
+        "conv_id", "n_turns", *_LABELS,
+        "_cust.account_holder_name AS account_holder_name",
+        "_cust.account_holder_address AS account_holder_address",
+        "_cust.account_holder_postcode AS account_holder_postcode",
         *extra_cols,
     )

@@ -11,7 +11,7 @@ Native aggregations only.  Parity with the reference scorer
   (orchestrator.py:398).
 
 Hard gates (confidence_scorer.py:72-110, Decision D-006) and warnings
-(:112-121) are evaluated as native when()/sum() aggregates and emitted
+(:112-121) are evaluated as native CASE/sum() aggregates and emitted
 as array<string> columns; gate-driven status overrides follow
 confidence_scorer.py:123-133 exactly (BALANCE_MISMATCH -> NEEDS_REVIEW,
 any other gate -> FAIL, else thresholds with PASS requiring zero
@@ -24,6 +24,12 @@ inputs, as the scorer API specifies — the stricter, safer contract.
 final_status: COMPLETED iff validation_status is PASS or
 PASS_WITH_WARNINGS (orchestrator.py:406-417 collapsed over the gate-
 aware statuses).
+
+``conversations_table``'s aggregates, score, gates, warnings and
+status ladder are SQL text built at import time: in PySpark 4.1 every
+Column method call makes ~20 py4j round trips (origin tracking), one
+``F.expr`` or ``selectExpr`` string about 6, and the stage is rebuilt
+for every resume group.
 """
 
 from __future__ import annotations
@@ -37,6 +43,72 @@ from ..kernels.classify import (
     CONFIDENCE_WARN_THRESHOLD,
     DOCUMENT_WEIGHTS,
 )
+from ..kernels.patterns import sql_double
+
+
+_AGGS = (
+    "CAST(count(1) AS INT) AS row_count",
+    "avg(CAST(confidence_amount AS DOUBLE)) AS _mean_amount",
+    "avg(CAST(confidence_direction AS DOUBLE)) AS _mean_direction",
+    "avg(CAST(confidence_date AS DOUBLE)) AS _mean_date",
+    "avg(CASE WHEN balance_confirmed THEN 0.8D ELSE 0.0D END) AS _mean_balance",
+    "avg(CAST(balance_confirmed AS DOUBLE)) AS _recon_rate",
+    "CAST(sum(CASE WHEN direction = 'UNKNOWN' THEN 1 ELSE 0 END) AS INT) AS _unknown_count",
+    *(f"coalesce(sum(CASE WHEN direction = '{d}' AND amount IS NOT NULL THEN abs(amount) END),"
+      f" CAST(0 AS DECIMAL(15,2))) AS {name}"
+      for d, name in (("DEBIT", "_total_debits"), ("CREDIT", "_total_credits"))),
+    "CAST(max(segment_index) + 1 AS INT) AS _n_rec_segments",
+)
+_BALANCE_AGGS = (
+    "min_by(segment_opening_balance, segment_index) AS _opening",
+    "CASE WHEN max_by(segment_closing_distinct, segment_index)"
+    " THEN max_by(segment_closing_balance, segment_index) END AS _closing",
+)
+# scorer called without balances: the mismatch gate never fires
+_NO_BALANCE_AGGS = ("CAST(NULL AS DECIMAL(15,2)) AS _opening",
+                    "CAST(NULL AS DECIMAL(15,2)) AS _closing")
+
+_WEIGHTED = " + ".join(
+    f"{sql_double(DOCUMENT_WEIGHTS[w])} * {c}" for w, c in (
+        ("reconciliation_rate", "_recon_rate"),
+        ("mean_balance_confidence", "_mean_balance"),
+        ("mean_direction_confidence", "_mean_direction"),
+        ("mean_amount_confidence", "_mean_amount"),
+        ("mean_date_confidence", "_mean_date")))
+# expected closing = opening + credits - debits (confidence_scorer.py:95-110)
+_BALANCE_DIFF = "abs(_opening + _total_credits - _total_debits - _closing)"
+_GATES = f"""filter(array(
+    CASE WHEN NOT row_count > 0 THEN 'NO_TRANSACTIONS' END,
+    CASE WHEN row_count > 0 AND _unknown_count = row_count
+         THEN 'HARD_GATE_ALL_DIRECTIONS_UNKNOWN' END,
+    CASE WHEN row_count > 0 AND _recon_rate < 0.5D AND row_count > 5
+         THEN 'HARD_GATE_LOW_RECONCILIATION' END,
+    CASE WHEN row_count > 0 AND _mean_amount < 0.5D
+         THEN 'HARD_GATE_LOW_AMOUNT_CONFIDENCE' END,
+    CASE WHEN row_count > 0 AND _opening IS NOT NULL AND _closing IS NOT NULL
+              AND {_BALANCE_DIFF} > CAST('5.00' AS DECIMAL(15,2))
+         THEN concat('HARD_GATE_BALANCE_MISMATCH_',
+                     CAST(CAST({_BALANCE_DIFF} AS DECIMAL(15,2)) AS STRING)) END
+), x -> x IS NOT NULL)"""
+_WARNINGS = """filter(array(
+    CASE WHEN row_count > 0 AND _unknown_count > 0 AND _unknown_count < row_count
+         THEN concat('WARN_', CAST(_unknown_count AS STRING), '_UNKNOWN_DIRECTIONS') END,
+    CASE WHEN row_count > 0 AND _mean_date < 0.7D THEN 'WARN_LOW_DATE_CONFIDENCE' END,
+    CASE WHEN row_count > 0 AND _recon_rate >= 0.5D AND _recon_rate < 0.8D
+         THEN 'WARN_MODERATE_RECONCILIATION' END
+), x -> x IS NOT NULL)"""
+# thresholds compare the UNROUNDED score (confidence_scorer.py:123-133
+# uses `weighted`, not the rounded output value)
+_STATUS = f"""CASE
+    WHEN size(hard_gate_failures) > 0
+         AND exists(hard_gate_failures, g -> contains(g, 'BALANCE_MISMATCH')) THEN 'NEEDS_REVIEW'
+    WHEN size(hard_gate_failures) > 0 THEN 'FAIL'
+    WHEN _weighted >= {sql_double(CONFIDENCE_PASS_THRESHOLD)} AND size(warnings) = 0 THEN 'PASS'
+    WHEN _weighted >= {sql_double(CONFIDENCE_WARN_THRESHOLD)} THEN 'PASS_WITH_WARNINGS'
+    WHEN _weighted >= {sql_double(CONFIDENCE_FAIL_THRESHOLD)} THEN 'NEEDS_REVIEW'
+    ELSE 'FAIL' END"""
+_FINAL_STATUS = ("CASE WHEN validation_status IN ('PASS', 'PASS_WITH_WARNINGS')"
+                 " THEN 'COMPLETED' ELSE 'NEEDS_REVIEW' END")
 
 
 def conversations_table(conv_meta: DataFrame, records: DataFrame) -> DataFrame:
@@ -51,110 +123,24 @@ def conversations_table(conv_meta: DataFrame, records: DataFrame) -> DataFrame:
     absent the gate never fires (scorer called without balances).
     """
     has_balances = "segment_opening_balance" in records.columns
-    agg = records.groupBy("conv_id").agg(
-        F.count(F.lit(1)).cast("int").alias("row_count"),
-        F.avg(F.col("confidence_amount").cast("double")).alias("_mean_amount"),
-        F.avg(F.col("confidence_direction").cast("double")).alias("_mean_direction"),
-        F.avg(F.col("confidence_date").cast("double")).alias("_mean_date"),
-        F.avg(F.when(F.col("balance_confirmed"), F.lit(0.8)).otherwise(F.lit(0.0))).alias("_mean_balance"),
-        F.avg(F.col("balance_confirmed").cast("double")).alias("_recon_rate"),
-        F.sum(F.when(F.col("direction") == "UNKNOWN", 1).otherwise(0))
-         .cast("int").alias("_unknown_count"),
-        F.coalesce(F.sum(F.when((F.col("direction") == "DEBIT")
-                                & F.col("amount").isNotNull(),
-                                F.abs(F.col("amount")))),
-                   F.lit(0).cast("decimal(15,2)")).alias("_total_debits"),
-        F.coalesce(F.sum(F.when((F.col("direction") == "CREDIT")
-                                & F.col("amount").isNotNull(),
-                                F.abs(F.col("amount")))),
-                   F.lit(0).cast("decimal(15,2)")).alias("_total_credits"),
-        (F.max("segment_index") + 1).cast("int").alias("_n_rec_segments"),
-        *([
-            F.min_by("segment_opening_balance", "segment_index").alias("_opening"),
-            F.when(F.max_by("segment_closing_distinct", "segment_index"),
-                   F.max_by("segment_closing_balance", "segment_index"))
-             .alias("_closing"),
-        ] if has_balances else []),
-    )
+    aggs = _AGGS + (_BALANCE_AGGS if has_balances else _NO_BALANCE_AGGS)
+    agg = records.groupBy("conv_id").agg(*(F.expr(a) for a in aggs))
 
     df = conv_meta.join(agg, "conv_id", "left")
     df = df.fillna({"row_count": 0, "_mean_amount": 0.0, "_mean_direction": 0.0,
                     "_mean_date": 0.0, "_mean_balance": 0.0, "_recon_rate": 0.0,
                     "_unknown_count": 0})
-
-    if not has_balances:
-        df = df.withColumn("_opening", F.lit(None).cast("decimal(15,2)")) \
-               .withColumn("_closing", F.lit(None).cast("decimal(15,2)"))
-
-    weighted = (
-        F.lit(DOCUMENT_WEIGHTS["reconciliation_rate"]) * F.col("_recon_rate")
-        + F.lit(DOCUMENT_WEIGHTS["mean_balance_confidence"]) * F.col("_mean_balance")
-        + F.lit(DOCUMENT_WEIGHTS["mean_direction_confidence"]) * F.col("_mean_direction")
-        + F.lit(DOCUMENT_WEIGHTS["mean_amount_confidence"]) * F.col("_mean_amount")
-        + F.lit(DOCUMENT_WEIGHTS["mean_date_confidence"]) * F.col("_mean_date")
-    )
-    # thresholds compare the UNROUNDED score (confidence_scorer.py:123-133
-    # uses `weighted`, not the rounded output value)
-    df = df.withColumn("_weighted", weighted)
-    df = df.withColumn("document_confidence", F.round(weighted, 4))
-    df = df.withColumn("reconciliation_rate", F.round(F.col("_recon_rate"), 4))
-
-    n = F.col("row_count")
-    has_rows = n > 0
-    # expected closing = opening + credits - debits (confidence_scorer.py:95-110)
-    balance_diff = F.abs(F.col("_opening") + F.col("_total_credits")
-                         - F.col("_total_debits") - F.col("_closing"))
-    gates = F.filter(F.array(
-        F.when(~has_rows, F.lit("NO_TRANSACTIONS")),
-        F.when(has_rows & (F.col("_unknown_count") == n),
-               F.lit("HARD_GATE_ALL_DIRECTIONS_UNKNOWN")),
-        F.when(has_rows & (F.col("_recon_rate") < 0.5) & (n > 5),
-               F.lit("HARD_GATE_LOW_RECONCILIATION")),
-        F.when(has_rows & (F.col("_mean_amount") < 0.5),
-               F.lit("HARD_GATE_LOW_AMOUNT_CONFIDENCE")),
-        F.when(has_rows & F.col("_opening").isNotNull()
-               & F.col("_closing").isNotNull()
-               & (balance_diff > F.lit("5.00").cast("decimal(15,2)")),
-               F.concat(F.lit("HARD_GATE_BALANCE_MISMATCH_"),
-                        balance_diff.cast("decimal(15,2)").cast("string"))),
-    ), lambda x: x.isNotNull())
-    warns = F.filter(F.array(
-        F.when(has_rows & (F.col("_unknown_count") > 0)
-               & (F.col("_unknown_count") < n),
-               F.concat(F.lit("WARN_"), F.col("_unknown_count").cast("string"),
-                        F.lit("_UNKNOWN_DIRECTIONS"))),
-        F.when(has_rows & (F.col("_mean_date") < 0.7),
-               F.lit("WARN_LOW_DATE_CONFIDENCE")),
-        F.when(has_rows & (F.col("_recon_rate") >= 0.5)
-               & (F.col("_recon_rate") < 0.8),
-               F.lit("WARN_MODERATE_RECONCILIATION")),
-    ), lambda x: x.isNotNull())
-    df = df.withColumn("hard_gate_failures", gates).withColumn("warnings", warns)
-
-    c = F.col("_weighted")
-    has_gates = F.size("hard_gate_failures") > 0
-    balance_gate = F.exists("hard_gate_failures",
-                            lambda g: g.contains("BALANCE_MISMATCH"))
-    df = df.withColumn(
-        "validation_status",
-        F.when(has_gates & balance_gate, "NEEDS_REVIEW")
-         .when(has_gates, "FAIL")
-         .when((c >= CONFIDENCE_PASS_THRESHOLD) & (F.size("warnings") == 0), "PASS")
-         .when(c >= CONFIDENCE_WARN_THRESHOLD, "PASS_WITH_WARNINGS")
-         .when(c >= CONFIDENCE_FAIL_THRESHOLD, "NEEDS_REVIEW")
-         .otherwise("FAIL"),
-    ).withColumn(
-        "final_status",
-        F.when(F.col("validation_status").isin("PASS", "PASS_WITH_WARNINGS"),
-               "COMPLETED").otherwise("NEEDS_REVIEW"),
-    )
+    df = df.selectExpr("*", f"{_WEIGHTED} AS _weighted",
+                       f"{_GATES} AS hard_gate_failures", f"{_WARNINGS} AS warnings")
+    df = df.selectExpr("*", f"{_STATUS} AS validation_status")
     passthrough = [c for c in ("n_segments",) if c in conv_meta.columns]
-    return df.select(
+    return df.selectExpr(
         "conv_id", "doc_family", "doc_family_confidence",
         "provider", "provider_confidence", "currency",
         "account_holder_name", "account_holder_address", "account_holder_postcode",
-        "document_confidence", "reconciliation_rate",
-        "validation_status", "final_status",
+        "round(_weighted, 4) AS document_confidence",
+        "round(_recon_rate, 4) AS reconciliation_rate",
+        "validation_status", f"{_FINAL_STATUS} AS final_status",
         "hard_gate_failures", "warnings", "row_count",
         *passthrough,
     )
