@@ -75,7 +75,7 @@ def main() -> None:
 
     if "pipeline" in phases:
         from universal_pdf_extractor_spark.stages.classify import classify_stage
-        from universal_pdf_extractor_spark.stages.extract import extract_combined_stage
+        from universal_pdf_extractor_spark.stages.extract import extract_stage
         from universal_pdf_extractor_spark.stages.pipeline import run_pipeline
         from universal_pdf_extractor_spark.stages.segment import segment_stage
         from universal_pdf_extractor_spark.stages.tokenize import tokenize_stage
@@ -88,8 +88,8 @@ def main() -> None:
         results["p1_tokenize"] = timed(spark, "p1 tokenize only", lambda: noop(turns))
         turns_seg = segment_stage(turns).drop("top_text")
         results["p2_tok_seg"] = timed(spark, "p2 tokenize+segment", lambda: noop(turns_seg))
-        comb = extract_combined_stage(turns_seg)
-        results["p3_extract"] = timed(spark, "p3 tok+seg+extract_combined", lambda: noop(comb))
+        comb = extract_stage(turns_seg)
+        results["p3_extract"] = timed(spark, "p3 tok+seg+extract", lambda: noop(comb))
         cls = classify_stage(turns_seg)
         results["p4_classify"] = timed(spark, "p4 tok+seg+classify", lambda: noop(cls))
 

@@ -50,11 +50,12 @@ def main(argv: list[str]) -> int:
     ap.add_argument("--groups", type=int, default=8,
                     help="resume granularity (hash bucket groups)")
     ap.add_argument("--split-segments", action="store_true",
-                    help="skew escape hatch: regroup extraction on "
-                         "(conv_id, segment_index) so pathological "
-                         "conversations split at statement boundaries "
-                         "— the semantically-valid form of salting the "
-                         "conv_id repartition (results identical)")
+                    help="skew escape hatch: repartition the extraction "
+                         "kernel's input on (conv_id, segment_index), one "
+                         "extra shuffle, so pathological conversations "
+                         "split at statement boundaries — the "
+                         "semantically-valid form of salting the conv_id "
+                         "repartition (results identical)")
     ap.add_argument("--master", default=os.environ.get("SPARK_MASTER", "local[32]"))
     ap.add_argument("--make-pyfiles", help="write engine zip and exit")
     args = ap.parse_args(argv)

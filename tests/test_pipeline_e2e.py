@@ -22,12 +22,21 @@ from universal_pdf_extractor_spark.stages.pipeline import run_pipeline
 N_CONVS = 60  # covers all 4 layout variants, all kinds, multi-segment convs
 
 
-@pytest.fixture(scope="module")
-def outputs(spark):
+def _pipeline_outputs(spark, **kw):
     pdf = generate_transcripts(N_CONVS)
     sdf = spark.createDataFrame(pdf, schema=TRANSCRIPTS_SCHEMA)
-    out = run_pipeline(sdf)
+    out = run_pipeline(sdf, **kw)
     return {name: df.toPandas() for name, df in out.items()}
+
+
+@pytest.fixture(scope="module")
+def outputs(spark):
+    return _pipeline_outputs(spark)
+
+
+@pytest.fixture(scope="module")
+def split_outputs(spark):
+    return _pipeline_outputs(spark, split_segments=True)
 
 
 @pytest.fixture(scope="module")
@@ -129,6 +138,27 @@ def test_segments_equality(outputs, oracle):
             assert g.segment_index == e["segment_index"]
             assert (g.opening_balance if pd.notna(g.opening_balance) else None) == e["opening_balance"]
             assert g.n_records == e["n_records"]
+
+
+_OUTPUT_KEYS = {
+    "turns": ["conv_id", "turn_idx"],
+    "records": ["conv_id", "segment_index", "row_index"],
+    "segments": ["conv_id", "segment_index"],
+    "conversations": ["conv_id"],
+    "detected_tables": ["conv_id", "segment_index"],
+}
+
+
+def test_split_segments_outputs_match_default(outputs, split_outputs):
+    """split_segments=True only regroups the extraction kernel's input,
+    so every output table equals the default grouping's, and every
+    oracle assertion above holds on the split path too."""
+    assert outputs.keys() == split_outputs.keys() == _OUTPUT_KEYS.keys()
+    for name, keys in _OUTPUT_KEYS.items():
+        a, b = (o[name].sort_values(keys).reset_index(drop=True)
+                for o in (outputs, split_outputs))
+        assert len(a) > 0, name
+        pd.testing.assert_frame_equal(a, b, obj=name)
 
 
 def _run_single_conv(spark, lines: list[str], conv_id: str = "conv_gated"):

@@ -5,7 +5,7 @@ cannot silently regress them:
 - tokenize is shuffle-free (pipelines inside the scan stage);
 - the whole tokenize -> segment -> extract chain introduces exactly
   ONE exchange (hash on conv_id), reused by both windows and the
-  grouped extraction UDF;
+  streamed mapInPandas extraction kernel;
 - column pruning reaches the parquet scan (a narrow projection reads
   only the needed transcript columns — `text` excluded when unused).
 """
@@ -56,12 +56,13 @@ def test_column_pruning_reaches_scan(transcripts):
 
 def test_split_segments_grouping_is_equivalent(transcripts):
     """Skew escape hatch: (conv_id, segment_index) grouping must yield
-    byte-identical records to conv_id grouping."""
+    byte-identical records and diagnostics to conv_id grouping."""
     seg = segment_stage(tokenize_stage(transcripts))
+    keys = ["conv_id", "segment_index", "row_type", "row_index"]
     a = extract_stage(seg, split_segments=False).toPandas() \
-        .sort_values(["conv_id", "segment_index", "row_index"]).reset_index(drop=True)
+        .sort_values(keys).reset_index(drop=True)
     b = extract_stage(seg, split_segments=True).toPandas() \
-        .sort_values(["conv_id", "segment_index", "row_index"]).reset_index(drop=True)
+        .sort_values(keys).reset_index(drop=True)
     assert a.equals(b)
     # and the split variant pays exactly one extra exchange
     plan = _plan(extract_stage(seg, split_segments=True))

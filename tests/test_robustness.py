@@ -26,6 +26,11 @@ NASTY = [
     "баланс 1000.00 türkçe ĞÜŞİÖÇ 中文转账 ¥5,000",
     "B/F\nC/F\nB/F\nC/F",                  # marker storm
     "01/01/2024 \t desc \x00with null byte \t 5.00",
+    # Unicode and control whitespace: Python's str.split() separates on
+    # each; Java's \s matches only \x0b of them and RE2's none
+    "Opening\xa0Balance 1,000.00",
+    "Statement\u2003Period 01/01/2024",
+    "opening\x0bbalance\x1c 5.00",
 ]
 
 

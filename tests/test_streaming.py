@@ -67,7 +67,28 @@ def test_stream_stateful_segments_match_batch(spark, tmp_path_factory):
         stream_segment_assignment,
     )
 
+    import pandas as pd
+
     pdf = generate_transcripts(12)
+    # statement headers whose words are separated by Unicode or control
+    # whitespace (NBSP, EM SPACE, FILE SEPARATOR): Python's str.split()
+    # treats each as whitespace, so the batch top band sees a boundary
+    # in each and the streaming rebuild must too
+    ws_texts = ["can you check my statement?",
+                "Opening\xa0Balance 1,000.00\n01/01/2024 Coffee 3.50",
+                "thanks", "sure",
+                "Statement\u2003Period: 01/01/2024 to 31/01/2024\n"
+                "02/01/2024 Rent 500.00",
+                "ok", "more", "chatter", "here",
+                "opening\x1cbalance 5.00\n03/01/2024 Tea 1.00",
+                "bye"]
+    ws = pd.DataFrame({"conv_id": "conv_unicode_ws",
+                       "turn_idx": range(len(ws_texts)), "role": "user",
+                       "text": ws_texts, "tool": None,
+                       "ts": pd.date_range("2024-01-01", periods=len(ws_texts),
+                                           freq="min")})
+    ws["turn_idx"] = ws["turn_idx"].astype(pdf["turn_idx"].dtype)
+    pdf = pd.concat([pdf, ws], ignore_index=True)
     base = tmp_path_factory.mktemp("stream_state")
     in_dir = str(base / "in")
     # turn-ordered chunk files: each conversation's first turns arrive
@@ -106,6 +127,8 @@ def test_stream_stateful_segments_match_batch(spark, tmp_path_factory):
     assert len(got) == len(exp) > 0
     assert (got["conv_id"] == exp["conv_id"]).all()
     assert (got["segment_index"] == exp["segment_index"]).all()
+    ws_segs = exp.loc[exp["conv_id"] == "conv_unicode_ws", "segment_index"]
+    assert list(ws_segs) == [0, 1, 1, 1, 2, 2, 2, 2, 2, 3, 3]
 
 
 def test_stream_stateful_segments_nonzero_start(spark, tmp_path_factory):

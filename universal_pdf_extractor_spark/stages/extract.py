@@ -1,4 +1,4 @@
-"""Stage 4 — per-segment record extraction (pandas UDF per conversation).
+"""Stage 4 — per-segment record extraction (one mapInPandas kernel).
 
 The sequential parts of the reference pipeline — row reconstruction
 (table_extractor.py:243-321), role assignment ordering
@@ -9,15 +9,17 @@ conversation's segments in order.  Everything upstream (tokenize,
 boundary scoring, segment ids) and downstream (scoring, joins,
 ordering) is native.
 
-The default path runs ``mapInPandas`` straight over the segment
-stage's output, which the window has already hash-partitioned by
-conv_id and sorted by (conv_id, turn_idx): it reuses that exchange —
-the plan shows a single Exchange feeding both — and one Arrow batch
-carries many whole conversations.  Conversations are bounded by
-MAX_TURNS in this corpus; for corpora with pathological conversation
-lengths, ``split_segments=True`` regroups by (conv_id, segment_index)
-with ``groupBy().applyInPandas`` instead (one extra shuffle, finer
-skew splitting) — see stages/pipeline.py.
+Each segment is analysed once and yields both its records and its
+detection diagnostics, as one ``row_type``-discriminated frame.  By
+default the kernel runs straight over the segment stage's output,
+which the window has already hash-partitioned by conv_id and sorted
+by (conv_id, turn_idx): it reuses that exchange — the plan shows a
+single Exchange feeding both — and one Arrow batch carries many whole
+conversations.  Conversations are bounded by MAX_TURNS in this corpus;
+for corpora with pathological conversation lengths,
+``split_segments=True`` puts a (conv_id, segment_index) repartition
+and sort in front of the same kernel (one extra shuffle, finer skew
+splitting) — see stages/pipeline.py.
 
 Output carries the reference `transactions` row shape
 (tables.py:298-382) plus per-segment opening/closing balances used to
@@ -77,13 +79,12 @@ RECORDS_STAGE_SCHEMA = StructType([
     StructField("segment_closing_distinct", BooleanType(), False),
 ])
 
-_COLUMNS = [f.name for f in RECORDS_STAGE_SCHEMA.fields]
+RECORD_COLUMNS = [f.name for f in RECORDS_STAGE_SCHEMA.fields]
 
-# combined records+diagnostics output: ONE analyse_segment pass emits
-# both surfaces (discriminated by row_type), so materializing
-# detected_tables costs zero extra Python work — the separate
-# diagnostics stage used to re-run the entire extraction kernel
-# (~25% of pipeline wall at sf0.1)
+# the stage's output: ONE analyse_segment pass per segment emits its
+# records AND its detected_tables diagnostics (discriminated by
+# row_type), so materializing detected_tables costs no extra Python
+# work
 _DIAG_FIELDS = [
     StructField("engine", StringType(), True),
     StructField("table_type", StringType(), True),
@@ -102,7 +103,6 @@ COMBINED_STAGE_SCHEMA = StructType(
     + _DIAG_FIELDS)
 
 _COMBINED_COLUMNS = [f.name for f in COMBINED_STAGE_SCHEMA.fields]
-RECORD_COLUMNS = _COLUMNS
 DIAG_COLUMNS = ["conv_id", "segment_index"] + [f.name for f in _DIAG_FIELDS]
 
 
@@ -118,14 +118,6 @@ def _conf(x: float) -> Decimal:
             _CONF_MEMO.clear()
         d = _CONF_MEMO[x] = Decimal(str(round(x, 4)))
     return d
-
-
-def _extract_conversation(pdf: pd.DataFrame) -> pd.DataFrame:
-    pdf = pdf.sort_values("turn_idx")
-    conv_id = pdf["conv_id"].iloc[0]
-    out_rows: list[dict] = []
-    _analyse_into(pdf, conv_id, out_rows)
-    return pd.DataFrame(out_rows, columns=_COLUMNS)
 
 
 def _segment_lines(seg: pd.DataFrame) -> list[dict]:
@@ -161,8 +153,7 @@ def _diag_row(conv_id: str, seg_idx: int, d: dict) -> dict:
 def _analyse_combined_into(pdf: pd.DataFrame, conv_id: str,
                            out_rows: list[dict]) -> None:
     """Records AND diagnostics from one analyse_segment call per
-    segment (row_type-discriminated; missing columns filled by the
-    DataFrame constructor as NaN -> null)."""
+    segment (row_type-discriminated)."""
     for seg_idx, seg in pdf.groupby("segment_index", sort=True):
         result = analyse_segment(_segment_lines(seg))
         seg_idx = int(seg_idx)
@@ -213,173 +204,61 @@ def _analyse_combined_into(pdf: pd.DataFrame, conv_id: str,
                              row_type="diag", evidence=[]))
 
 
-def _combined_stream(batches):
-    return _stream_conversations(batches, _analyse_combined_into,
-                                 _COMBINED_COLUMNS)
-
-
-def extract_combined_stage(turns_seg: DataFrame) -> DataFrame:
-    """turns(+segment_index) -> row_type-discriminated union of
-    extracted records and per-segment diagnostics, from ONE pass.
-    Same partition-layout contract as extract_stage."""
-    slim = turns_seg.select("conv_id", "turn_idx", "segment_index", "payload")
-    return slim.mapInPandas(_combined_stream, schema=COMBINED_STAGE_SCHEMA)
-
-
-def _analyse_into(pdf: pd.DataFrame, conv_id: str, out_rows: list[dict]) -> None:
-    for seg_idx, seg in pdf.groupby("segment_index", sort=True):
-        lines = _segment_lines(seg)
-        result = analyse_segment(lines)
-        for rec in result["records"]:
-            out_rows.append({
-                "conv_id": conv_id,
-                "segment_index": int(seg_idx),
-                "row_index": rec["row_index"],
-                "turn_idx": rec["turn_idx"],
-                "posted_date": rec["posted_date"],
-                "description_raw": rec["description_raw"],
-                "description_clean": rec["description_clean"],
-                "amount": rec["amount"],
-                "direction": rec["direction"],
-                "direction_source": rec["direction_source"],
-                "running_balance": rec["running_balance"],
-                "balance_confirmed": rec["balance_confirmed"],
-                "balance_tolerance_used": rec["balance_tolerance_used"],
-                "confidence_amount": _conf(rec["confidence_amount"]),
-                "confidence_date": _conf(rec["confidence_date"]),
-                "confidence_direction": _conf(rec["confidence_direction"]),
-                "fallback_used": result["fallback_used"],
-                "evidence": [(e["field"], e["turn_idx"], e["start"], e["end"])
-                             for e in rec["evidence"]],
-                "segment_opening_balance": result["opening_balance"],
-                "segment_closing_balance": result["closing_balance"],
-                "segment_closing_distinct": result["closing_balance_distinct"],
-            })
-
-
-def _stream_conversations(batches, analyse_into, columns):
-    """Secondary-sort mapInPandas body: many conversations per Arrow
-    batch, with the partition's trailing (possibly incomplete)
-    conversation buffered across batch boundaries."""
+def _whole_conversations(batches):
+    """Re-cut a sorted partition's Arrow batches at conv_id boundaries,
+    buffering the trailing (possibly incomplete) conversation across
+    batch boundaries."""
     leftover: pd.DataFrame | None = None
     for pdf in batches:
-        if leftover is not None and len(leftover):
+        if leftover is not None:
             pdf = pd.concat([leftover, pdf], ignore_index=True)
-            leftover = None
         if not len(pdf):
             continue
+        # conv_ids are contiguous in a sorted partition, so the last
+        # conversation is a suffix run; hold it back for the next batch
         last_conv = pdf["conv_id"].iloc[-1]
-        tail_mask = (pdf["conv_id"] == last_conv).to_numpy()
-        # conv_ids are contiguous in a sorted partition, so the tail
-        # mask is a suffix run; hold it back for the next batch
-        split_at = len(pdf) - int(tail_mask.sum())
-        complete, leftover = pdf.iloc[:split_at], pdf.iloc[split_at:]
-        if len(complete):
+        split_at = len(pdf) - int((pdf["conv_id"] == last_conv).sum())
+        yield pdf.iloc[:split_at]
+        leftover = pdf.iloc[split_at:]
+    if leftover is not None:
+        yield leftover
+
+
+def _extract_batches(batches):
+    for pdf in _whole_conversations(batches):
+        if len(pdf):
             out_rows: list[dict] = []
-            for conv_id, grp in complete.groupby("conv_id", sort=False):
-                analyse_into(grp, conv_id, out_rows)
-            yield pd.DataFrame(out_rows, columns=columns)
-    if leftover is not None and len(leftover):
-        out_rows = []
-        for conv_id, grp in leftover.groupby("conv_id", sort=False):
-            analyse_into(grp, conv_id, out_rows)
-        yield pd.DataFrame(out_rows, columns=columns)
+            for conv_id, grp in pdf.groupby("conv_id", sort=False):
+                _analyse_combined_into(grp, conv_id, out_rows)
+            yield pd.DataFrame(out_rows, columns=_COMBINED_COLUMNS)
 
 
-def _extract_stream(batches):
-    return _stream_conversations(batches, _analyse_into, _COLUMNS)
+def extract_stage(turns_seg: DataFrame, split_segments: bool = False) -> DataFrame:
+    """turns(+segment_index) -> row_type-discriminated union of
+    extracted records ("record", one per reconstructed transaction
+    row) and per-segment diagnostics ("diag"), from ONE pass.
 
-
-def extract_stage(turns_seg: DataFrame, split_segments: bool = False,
-                  assume_layout: bool = True) -> DataFrame:
-    """turns(+segment_index) -> extracted records (one row per
-    reconstructed transaction row).
-
-    Default path: mapInPandas over the segment stage's output, which
-    the window has already hash-partitioned by conv_id AND sorted by
-    (conv_id, turn_idx) within partitions (WindowExec's required sort
-    covers partition keys then order keys).  That layout lets one
-    Arrow batch carry MANY whole conversations — versus
+    Default grouping: mapInPandas over the segment stage's output,
+    which the window has already hash-partitioned by conv_id AND
+    sorted by (conv_id, turn_idx) within partitions (WindowExec's
+    required sort covers partition keys then order keys).  That layout
+    lets one Arrow batch carry MANY whole conversations — versus
     groupBy().applyInPandas, which pays one Python round trip per
     conversation (tiny ~30-row batches dominated by overhead).  The
     plan-shape test pins the no-extra-exchange property; the e2e
     oracle test pins value equality.
 
-    split_segments=True is the skew escape hatch: explicit repartition
-    on (conv_id, segment_index) + applyInPandas so giant documents
-    split at statement boundaries.  Results identical — analysis state
-    never crosses a segment boundary.
+    split_segments=True is the skew escape hatch: an explicit
+    repartition on (conv_id, segment_index) plus a sort in front of
+    the same kernel, so giant documents split at statement boundaries.
+    Results are identical — analysis state never crosses a segment
+    boundary.
     """
     slim = turns_seg.select("conv_id", "turn_idx", "segment_index", "payload")
     if split_segments:
-        slim = slim.repartition("conv_id", "segment_index")
-        return slim.groupBy("conv_id", "segment_index").applyInPandas(
-            _extract_conversation, schema=RECORDS_STAGE_SCHEMA)
-    if not assume_layout:
-        # standalone use (input not produced by segment_stage in this
-        # plan): enforce co-location + contiguity explicitly
-        slim = slim.repartition("conv_id") \
-                   .sortWithinPartitions("conv_id", "turn_idx")
-    return slim.mapInPandas(_extract_stream, schema=RECORDS_STAGE_SCHEMA)
-
-
-# detected_tables analogue (tables.py:252-292): per-segment detection
-# diagnostics — which engine produced the table, its column geometry,
-# assigned roles and header line — the first table a user debugging a
-# bad extraction needs.  JSON columns mirror the reference's
-# bbox_json / header_row_json / column_mapping_json JSONB fields.
-DIAG_SCHEMA = StructType([
-    StructField("conv_id", StringType(), False),
-    StructField("segment_index", IntegerType(), False),
-    StructField("engine", StringType(), False),
-    StructField("table_type", StringType(), False),
-    StructField("row_count", IntegerType(), False),
-    StructField("column_count", IntegerType(), True),
-    StructField("bbox_json", StringType(), True),
-    StructField("header_json", StringType(), True),
-    StructField("column_mapping_json", StringType(), True),
-])
-
-_DIAG_COLUMNS = [f.name for f in DIAG_SCHEMA.fields]
-
-
-def _diagnose_into(pdf: pd.DataFrame, conv_id: str, out_rows: list[dict]) -> None:
-    import json
-
-    for seg_idx, seg in pdf.groupby("segment_index", sort=True):
-        d = analyse_segment(_segment_lines(seg))["diagnostics"]
-        out_rows.append({
-            "conv_id": conv_id,
-            "segment_index": int(seg_idx),
-            "engine": d["engine"],
-            "table_type": d["table_type"],
-            "row_count": int(d["row_count"]),
-            "column_count": (int(d["column_count"])
-                             if d.get("column_count") is not None else None),
-            "bbox_json": (json.dumps(d["bbox"], sort_keys=True)
-                          if d.get("bbox") is not None else None),
-            "header_json": (json.dumps(d["header"], sort_keys=True)
-                            if d.get("header") is not None else None),
-            "column_mapping_json": (json.dumps(d["column_mapping"], sort_keys=True)
-                                    if d.get("column_mapping") is not None else None),
-        })
-
-
-def detected_tables_stage(turns_seg: DataFrame,
-                          assume_layout: bool = True) -> DataFrame:
-    """turns(+segment_index) -> one diagnostics row per segment.
-
-    Same partition-layout contract as extract_stage (hash-partitioned
-    by conv_id, sorted by (conv_id, turn_idx)); a separate lazy plan so
-    the diagnostics pass only runs when this output is consumed.
-    """
-    slim = turns_seg.select("conv_id", "turn_idx", "segment_index", "payload")
-    if not assume_layout:
-        slim = slim.repartition("conv_id") \
-                   .sortWithinPartitions("conv_id", "turn_idx")
-    return slim.mapInPandas(
-        lambda batches: _stream_conversations(batches, _diagnose_into, _DIAG_COLUMNS),
-        schema=DIAG_SCHEMA)
+        slim = slim.repartition("conv_id", "segment_index") \
+                   .sortWithinPartitions("conv_id", "segment_index", "turn_idx")
+    return slim.mapInPandas(_extract_batches, schema=COMBINED_STAGE_SCHEMA)
 
 
 def segments_table(turns_seg: DataFrame, records: DataFrame) -> DataFrame:

@@ -3,8 +3,7 @@
     transcripts
       -> tokenize_stage      (no shuffle; Arrow-batched layout kernel)
       -> segment_stage       (native rlike + window; shuffle #1 on conv_id)
-      -> extract_combined_stage
-                             (mapInPandas over whole conversations:
+      -> extract_stage       (mapInPandas over whole conversations:
                               records and detected_tables diagnostics
                               from one pass; REUSES the conv_id
                               exchange - no new shuffle)
@@ -18,10 +17,10 @@ Scale notes (10^12 turns):
 - the fat `text` column is shuffled exactly once (the conv_id
   exchange); all conversation-level stages hang off that one exchange;
 - AQE handles skewed conversations at the exchange; for corpora with
-  unbounded conversation lengths switch EXTRACT grouping to
-  (conv_id, segment_index) with split_segments=True — boundaries
-  split giant documents the same way the reference segments
-  multi-statement PDFs;
+  unbounded conversation lengths split_segments=True regroups the
+  extraction kernel's input on (conv_id, segment_index) — one extra
+  shuffle of the slim payload columns, and boundaries split giant
+  documents the same way the reference segments multi-statement PDFs;
 - outputs are written partitioned by bucket(conv_id) with
   (conv_id, turn_idx) sort order; see io/manifest.py for resumable
   per-bucket writes.
@@ -29,17 +28,12 @@ Scale notes (10^12 turns):
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: N812
 
 from .classify import classify_stage
-from .extract import (
-    DIAG_COLUMNS,
-    RECORD_COLUMNS,
-    extract_combined_stage,
-    extract_stage,
-    segments_table,
-)
+from .extract import DIAG_COLUMNS, RECORD_COLUMNS, extract_stage, segments_table
 from .score import conversations_table
 from .segment import segment_stage
 from .tokenize import tokenize_stage
@@ -50,9 +44,16 @@ def run_pipeline(transcripts: DataFrame, persist: bool = False,
     """Assemble all output tables (lazily).
 
     persist=True caches the post-segmentation frame (the single
-    conv_id exchange) so forcing all four outputs does not recompute
-    tokenize+window per sink; callers unpersist via the returned
-    frame's ``.unpersist()`` (exposed as key "_turns_seg").
+    conv_id exchange) and the extraction stage's row_type-discriminated
+    frame, so forcing all five outputs does not recompute
+    tokenize+window or the extraction kernel per sink; callers
+    unpersist both via their ``.unpersist()`` (exposed as keys
+    "_turns_seg" and "_records_stage").
+
+    split_segments=True regroups the extraction kernel's input on
+    (conv_id, segment_index) instead of reusing the conv_id exchange:
+    one extra shuffle that lets a giant conversation spread over tasks
+    at its statement boundaries.  Every output is identical either way.
     """
     # NOTE: an exchange-before-tokenize layout (shuffling only raw
     # transcript columns) was tried and rejected: ArrowEvalPython does
@@ -65,30 +66,16 @@ def run_pipeline(transcripts: DataFrame, persist: bool = False,
     # cached/downstream frame free of it
     turns_seg = turns_seg.drop("top_text")
     if persist:
-        from pyspark import StorageLevel
         turns_seg = turns_seg.persist(StorageLevel.MEMORY_AND_DISK)
 
-    if split_segments:
-        # skew escape hatch keeps the dedicated record stage; the
-        # diagnostics pass stays separate on this path
-        combined = None
-        records_stage = extract_stage(turns_seg, split_segments=True)
-    else:
-        # ONE analyse_segment pass yields records AND per-segment
-        # diagnostics (row_type-discriminated): materializing
-        # detected_tables no longer re-runs the extraction kernel
-        combined = extract_combined_stage(turns_seg)
-        if persist:
-            from pyspark import StorageLevel
-            combined = combined.persist(StorageLevel.MEMORY_AND_DISK)
-        records_stage = combined.where(F.col("row_type") == "record") \
-                                .select(*RECORD_COLUMNS)
-    if persist and combined is None:
-        # segments and conversations both aggregate the records frame;
-        # without this the extraction UDF (the most expensive stage)
-        # would execute once per consumer
-        from pyspark import StorageLevel
-        records_stage = records_stage.persist(StorageLevel.MEMORY_AND_DISK)
+    # ONE analyse_segment pass yields records AND per-segment
+    # diagnostics (row_type-discriminated): segments, conversations
+    # and detected_tables all read this frame
+    combined = extract_stage(turns_seg, split_segments)
+    if persist:
+        combined = combined.persist(StorageLevel.MEMORY_AND_DISK)
+    records_stage = combined.where(F.col("row_type") == "record") \
+                            .select(*RECORD_COLUMNS)
     records = records_stage.drop("segment_opening_balance",
                                  "segment_closing_balance",
                                  "segment_closing_distinct")
@@ -117,12 +104,8 @@ def run_pipeline(transcripts: DataFrame, persist: bool = False,
         "n_lines", "n_tokens", "mean_token_confidence", "segment_index",
         "boundary_score", "is_boundary", "boundary_confidence",
     )
-    if combined is not None:
-        detected = combined.where(F.col("row_type") == "diag") \
-                           .select(*DIAG_COLUMNS)
-    else:
-        from .extract import detected_tables_stage
-        detected = detected_tables_stage(turns_seg)
+    detected = combined.where(F.col("row_type") == "diag") \
+                       .select(*DIAG_COLUMNS)
     out = {
         "turns": turns_out,
         "records": records,
@@ -132,5 +115,5 @@ def run_pipeline(transcripts: DataFrame, persist: bool = False,
     }
     if persist:
         out["_turns_seg"] = turns_seg
-        out["_records_stage"] = combined if combined is not None else records_stage
+        out["_records_stage"] = combined
     return out

@@ -129,16 +129,17 @@ def stream_segment_assignment(spark: SparkSession, input_path: str,
     # and build top_text with column expressions — the same
     # construction as layout.turn_view: whitespace-normalized
     # non-empty lines among the first TOP_REGION_LINES original
-    # lines, ' '-joined, lowered (the transcripts oracle SQL derives
-    # top_text identically; equality with the UDF path is pinned by
-    # tests/test_streaming.py)
+    # lines, ' '-joined, lowered; equality with the UDF path is pinned
+    # by tests/test_streaming.py.  Python's str.split() whitespace is
+    # Java's Unicode \s plus the \x1c-\x1f separators; a bare \s is
+    # ASCII-only in Java and would miss NBSP, \u2003 and the like
     text_ok = F.col("text").isNotNull() & (F.col("text") != "")
     tool_ok = F.col("tool").isNotNull() & (F.col("tool") != "")
     payload = F.when(text_ok, F.col("text")) \
                .when(tool_ok, F.col("tool")).otherwise(F.lit(""))
     top_text = F.lower(F.array_join(F.filter(
         F.transform(F.slice(F.split(payload, "\n"), 1, TOP_REGION_LINES),
-                    lambda l: F.trim(F.regexp_replace(l, r"\s+", " "))),
+                    lambda l: F.trim(F.regexp_replace(l, r"(?U)[\s\x1c-\x1f]+", " "))),
         lambda l: l != ""), " "))
     turns = stream.select(
         "conv_id", "turn_idx",
